@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DataType
 
 /** One Catalyst expression for every [[Bridge]] kernel. eval uses the
@@ -94,9 +94,10 @@ class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Un
   }
 }
 
-/** Registers every bridge kernel as a SQL-callable function
-  * `graft_<name>` and exposes typed Column wrappers. Usable both from
-  * the DataFrame DSL (via [[dsl]]) and from `spark.sql`.
+/** Typed Column wrappers over every bridge kernel ([[dsl]], usable on
+  * any session) and the `spark.sql` surface: [[install]] registers each
+  * kernel as the SQL function `graft_<name>` plus the [[FuseSosfilt]]
+  * optimizer rule.
   */
 object Functions {
 
@@ -141,12 +142,13 @@ object Functions {
           DspExpr(n, exprs)))
     }
 
-  /** Column DSL over the registered functions; `install` must have run
-    * on the owning session.
+  /** Column DSL over the bridge kernels. Each wrapper builds its
+    * [[DspExpr]] directly (no registry lookup), so it works on any
+    * session, whether or not [[install]] ran there.
     */
   object dsl {
     private def call(fn: String, cols: Column*): Column =
-      call_function(s"graft_${fn.toLowerCase}", cols: _*)
+      ColumnBridge.column(DspExpr(fn, cols.map(ColumnBridge.expression)))
 
     import org.apache.spark.sql.functions.lit
 

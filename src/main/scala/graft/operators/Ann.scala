@@ -40,10 +40,8 @@ object Ann {
     * the array first, so the double-side oracle still matches.)
     */
   private def vectors(df: DataFrame, idCol: String, vecCol: String,
-                      id: String, v: String): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
+                      id: String, v: String): DataFrame =
     df.select(col(idCol).as(id), col(vecCol).as(v))
-  }
 
   /** Exact top-k cosine neighbors for each query vector.
     * Output: (query_id, rank, neighbor_id, score_fp) where score_fp is
@@ -140,7 +138,6 @@ object Ann {
   def topkIvf(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, nCentroids: Option[Int] = None,
               nProbe: Int = 4, centroids: Option[DataFrame] = None): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     // Option, not a default-value sentinel: an explicitly-passed
     // nCentroids alongside a centroids DataFrame is always rejected
     // (ADVICE r7 — the old `== 16` guard let an explicit 16 through)
@@ -255,7 +252,6 @@ object Ann {
     */
   def kmeansFit(corpus: DataFrame, idCol: String, vecCol: String,
                 k: Int, iters: Int = 2): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     require(k >= 1, "k must be positive")
     require(iters >= 0, "iters must be nonnegative")
     def quant(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
@@ -314,7 +310,6 @@ object Ann {
     */
   def assignCells(corpus: DataFrame, centroids: DataFrame, idCol: String,
                   vecCol: String, cellCol: String = "cell"): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     val cents = centroids
       .select(col(idCol).cast("int"), asDouble(col(vecCol)))
       .collect()
@@ -393,7 +388,6 @@ object Ann {
     */
   def pqFit(corpus: DataFrame, idCol: String, vecCol: String,
             nSub: Int = 8, kSub: Int = 16, iters: Int = 2): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     require(nSub >= 1 && kSub >= 1 && iters >= 0,
       "nSub/kSub must be positive, iters nonnegative")
     def quant(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
@@ -492,7 +486,6 @@ object Ann {
     */
   def pqEncode(corpus: DataFrame, codebooks: DataFrame, idCol: String,
                vecCol: String, codesCol: String = "codes"): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     val cb = collectCodebook(codebooks)
     // ONE kernel call per row (graft_pqassign) — the old per-(m, cell)
     // struct chain put nSub·kSub literal subtrees in the encode Project
@@ -526,7 +519,6 @@ object Ann {
   def topkPq(corpus: DataFrame, queries: DataFrame, idCol: String,
              vecCol: String, k: Int, nSub: Int = 8, kSub: Int = 16,
              iters: Int = 2, codebooks: Option[DataFrame] = None): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     val cbFrame = codebooks.getOrElse(
       pqFit(corpus, idCol, vecCol, nSub, kSub, iters))
     val cb = collectCodebook(cbFrame)
@@ -573,7 +565,6 @@ object Ann {
                 kSub: Int = 16, iters: Int = 1,
                 centroids: Option[DataFrame] = None,
                 nCentroids: Option[Int] = None): DataFrame = {
-    graft.functions.Functions.install(corpus.sparkSession)
     require(centroids.isEmpty || nCentroids.isEmpty,
       "nCentroids only parameterizes the stand-in quantizer; with a " +
         "caller-supplied centroids DataFrame the cell count is its row count")
@@ -741,7 +732,6 @@ object Ann {
     */
   def opqRotate(df: DataFrame, vecCol: String,
                 rotation: Array[Array[Double]], outCol: String): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     // one matVec kernel call — the old d-component array of d-literal
     // dotp expressions put d² literals in one Project (same codegen
     // blowup class as the round-12 IVF/PQ chains); ascending dots per

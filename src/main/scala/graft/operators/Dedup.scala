@@ -352,7 +352,6 @@ object Dedup {
     * identical to the whitespace split on pure-ASCII text).
     */
   def simhashFrame(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     df.withColumn("_sh", simhashC(TextOps.unicodeTokens(col(textCol))))
       .withColumn("sim_hi", col("_sh.hi"))
       .withColumn("sim_lo", col("_sh.lo"))
@@ -722,7 +721,6 @@ object Dedup {
   def semDedup(df: DataFrame, idCol: String, vecCol: String,
                minCos: Double, k: Int = 16, iters: Int = 2,
                centroids: Option[DataFrame] = None): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     val cents = centroids.getOrElse(Ann.kmeansFit(df, idCol, vecCol, k, iters))
     val centRows = cents
       .select(col(idCol).cast("int"), Ann.asDouble(col(vecCol)))

@@ -24,12 +24,6 @@ import graft.functions.Functions.dsl._
   */
 object Signal {
 
-  /** keys+coord+values long frame → one row per series:
-    * keys..., n (int), delta (double), cmin, cmax, coords
-    * (array<double>), <value> (array<double>) per value column —
-    * deterministically ordered by coordinate regardless of shuffle
-    * nondeterminism (array_sort on struct(coord, ...)).
-    */
   /** Columns that mark a frame as already seriesified. */
   private val seriesCols = Seq("n", "delta", "cmin", "cmax", "coords")
 
@@ -82,82 +76,56 @@ object Signal {
       .withColumn("cmax",
         when(col("n") > 0, element_at(col(coordsCol), col("n")).cast("double"))
           .otherwise(lit(0.0)))
-      .withColumn("delta",
-        when(col("n") > 1, (col("cmax") - col("cmin")) / (col("n") - 1))
-          .otherwise(lit(1.0)))
+      .withColumn("delta", spacing)
       .withColumn("coords", expr(s"transform($coordsCol, c -> CAST(c AS DOUBLE))"))
       .withMetadata("n", seriesMeta)
 
-  /** Explicit-count keyed repartition feeding a groupBy on the same
-    * keys — MEASURED AS A NET REGRESSION and disabled by default
-    * (optimization round 22): AQE coalesces the seriesify/gridify
-    * exchange to 1–3 byte-sized partitions (packed series are tiny),
-    * which looked like serialized kernel CPU, but the in-JVM A/B
-    * (tools/SigSpreadProbe, alternating per rep so host drift cancels)
-    * shows the explicit spread LOSES on most of the family — the
-    * repartition forfeits the map-side partial collect_list, adds a
-    * plan-forcing `.rdd` width probe, and shuffles raw rows:
-    * sosfilt 1.05 (off) vs 1.32 (on), stft 0.84/0.99, correlate2d
-    * 1.50/1.66, welch_long 1.29/1.45, fftconvolve3d 1.14/1.29 —
-    * only the multi-kernel unions won (complex_modes 1.60/1.33,
-    * dct_roundtrip 1.18/1.05). Net across the family: off. Kept
-    * behind `-Dgraft.sig.spread=true` for re-measurement on wider
-    * hosts; the 100 TB story is unchanged either way (at scale the
-    * agg's shuffle is byte-heavy and AQE sizes it correctly).
-    */
-  private def keyedSpread(df: DataFrame, keys: Seq[String]): DataFrame =
-    if (keys.isEmpty ||
-        !"true".equals(System.getProperty("graft.sig.spread"))) df
-    else {
-      val p = math.max(df.sparkSession.sparkContext.defaultParallelism,
-        df.rdd.getNumPartitions)
-      df.repartition(p, keys.map(col): _*)
-    }
+  /** Series spacing from its length and coordinate span. */
+  private val spacing: Column =
+    when(col("n") > 1, (col("cmax") - col("cmin")) / (col("n") - 1)).otherwise(lit(1.0))
 
+  /** The one series-assembly primitive (SURVEY.md §4): group by
+    * `keys`, collect each row's `packed` fields (name -> element) as a
+    * struct and sort the list as `_arr`, so the order is deterministic
+    * whatever order the shuffle delivers (array_sort compares the
+    * structs field by field, in `packed` order). `aggs` ride in the
+    * same aggregate; `cols` (name -> expression over `_arr` and the
+    * aggregates, typically a [[field]]) are then added in order.
+    */
+  private def assemble(df: DataFrame, keys: Seq[String], packed: Seq[(String, Column)],
+                       aggs: Seq[Column], cols: Seq[(String, Column)]): DataFrame = {
+    val arr = array_sort(collect_list(struct(packed.map { case (f, c) => c.as(f) }: _*)))
+    cols.foldLeft(df.groupBy(keys.map(col): _*).agg(arr.as("_arr"), aggs: _*)) {
+      case (g, (name, c)) => g.withColumn(name, c)
+    }
+  }
+
+  /** One packed field of [[assemble]]'s `_arr`, as an array. */
+  private def field(f: String): Column = expr(s"transform(_arr, s -> s.$f)")
+
+  /** A sample as the kernels see it: a null becomes NaN and propagates
+    * through the kernel, mirroring numpy/scipy.
+    */
+  private def nanIfNull(v: String): Column = coalesce(col(v).cast("double"), lit(Double.NaN))
+
+  /** keys+coord+values long frame → one row per series:
+    * keys..., n (int), delta (double), cmin, cmax, coords
+    * (array<double>), <value> (array<double>) per value column —
+    * deterministically ordered by coordinate regardless of shuffle
+    * nondeterminism (array_sort on struct(coord, ...)).
+    */
   def seriesify(df: DataFrame, keys: Seq[String], dim: String,
                 values: Seq[String]): DataFrame = {
     if (isSeriesified(df) && values.forall(df.columns.contains))
       return df // already seriesified (fromGrouped) — no shuffle
-    // Null handling mirrors numpy/scipy: a null sample becomes NaN and
-    // propagates through the kernel; a row with no coordinate cannot be
-    // placed on the (equispaced) axis and is dropped.
-    val packed = struct(
-      (col(dim).cast("double").as("c") +:
-        values.zipWithIndex.map { case (v, i) =>
-          coalesce(col(v).cast("double"), lit(Double.NaN)).as(s"v$i")
-        }): _*)
-    val clean0 = df.filter(col(dim).isNotNull)
-    // Keyed series get an EXPLICIT-count repartition on the group keys
-    // (optimization round 22, guide §2.5): the bare groupBy's
-    // ENSURE_REQUIREMENTS exchange is AQE-coalesced by BYTES, and a
-    // packed series is tiny (50 users × 10k samples ≈ 4 MB), so the
-    // final aggregate — where array_sort, the transforms and every
-    // downstream KERNEL expression run — collapsed to 1–3 tasks while
-    // the rest of the machine idled (stage listener: 1-task stages of
-    // 0.4–1.4 s wall carrying the kernel CPU on sig_complex_modes /
-    // sig_fft_norm_roundtrips). The agg reuses HashPartitioning(keys,
-    // p), so the plan keeps exactly ONE hash exchange (PlanShapeSpec's
-    // pin) — REPARTITION_BY_NUM is user-specified and AQE never
-    // coalesces it. p floors at defaultParallelism and keeps the
-    // input's own width when wider, the shingleFrame rule; results are
-    // per-group and partitioning-independent (hash-oracle-pinned).
-    val clean = keyedSpread(clean0, keys)
-    val grouped =
-      if (keys.isEmpty) clean.groupBy()
-      else clean.groupBy(keys.map(col): _*)
-    var out = grouped
-      .agg(
-        array_sort(collect_list(packed)).as("_arr"),
-        count(lit(1)).cast("int").as("n"),
-        min(col(dim).cast("double")).as("cmin"),
-        max(col(dim).cast("double")).as("cmax"))
-      .withColumn("delta",
-        when(col("n") > 1, (col("cmax") - col("cmin")) / (col("n") - 1))
-          .otherwise(lit(1.0)))
-      .withColumn("coords", expr("transform(_arr, s -> s.c)"))
-    values.zipWithIndex.foreach { case (v, i) =>
-      out = out.withColumn(v, expr(s"transform(_arr, s -> s.v$i)"))
-    }
+    // A row with no coordinate cannot be placed on the (equispaced)
+    // axis and is dropped; a null sample becomes NaN.
+    val c = col(dim).cast("double")
+    val vs = values.indices.map(i => s"v$i")
+    var out = assemble(df.filter(col(dim).isNotNull), keys,
+      ("c" -> c) +: vs.zip(values.map(nanIfNull)),
+      Seq(count(lit(1)).cast("int").as("n"), min(c).as("cmin"), max(c).as("cmax")),
+      Seq("delta" -> spacing, "coords" -> field("c")) ++ values.zip(vs.map(field)))
     // Opt-in strict equispacing check (see [[EquispacedTolKey]]): the
     // assertion is woven into each VALUE column (kernels always consume
     // one) rather than emitted as its own column, which Catalyst would
@@ -344,7 +312,7 @@ object Signal {
                  value: String, inverse: Boolean = false): DataFrame = {
     val nd = dims.length
     require(nd >= 1, "need at least one dim")
-    val g = gridify(df, keys, dims, value, "fftshift", keepCoords = true)
+    val g = gridify(df, keys, dims, Seq(value), "fftshift", keepCoords = true)
     val shapeArr = array((1 to nd).map(i => col(s"_n$i")): _*)
     val shift1: Column => Column = if (inverse) ifftshiftC else fftshiftC
     val shifted = (1 to nd).foldLeft(
@@ -355,8 +323,7 @@ object Signal {
       (keys.map(col) ++ (1 to nd).flatMap(i => Seq(col(s"_n$i"), col(s"_sc$i"))) :+
         posexplode(col("_sv")).as(Seq("_p", "value"))): _*)
     val withPos = (1 to nd).foldLeft(exploded) { (d, i) =>
-      val later = ((i + 1 to nd).map(j => s"_n$j") :+ "1").mkString(" * ")
-      d.withColumn(s"pos$i", expr(s"int((_p div ($later)) % _n$i)"))
+      d.withColumn(s"pos$i", gridPos(i, nd, j => s"_n$j"))
         .withColumn(dims(i - 1), expr(s"element_at(_sc$i, pos$i + 1)"))
     }
     withPos.select(
@@ -371,16 +338,14 @@ object Signal {
     */
   def medfilt2d(df: DataFrame, keys: Seq[String], dim1: String, dim2: String,
                 value: String, kernelSize: (Int, Int) = (3, 3)): DataFrame = {
-    val g = gridify(df, keys, Seq(dim1, dim2), value, "medfilt2d")
+    val g = gridify(df, keys, Seq(dim1, dim2), Seq(value), "medfilt2d")
     val withOut = g.withColumn("_out",
       medfilt2dC(col("_vals"), col("_n1").cast("int"), col("_n2").cast("int"),
         kernelSize._1, kernelSize._2))
     val exploded = withOut.select(
       (keys.map(col) :+ col("_n2") :+
         posexplode(col("_out")).as(Seq("_p", "value"))): _*)
-    exploded.select(
-      (keys.map(col) :+ expr("int(_p div _n2)").as("pos1") :+
-        expr("int(_p % _n2)").as("pos2") :+ col("value")): _*)
+    selectGrid(exploded, keys, 2, i => s"_n$i", col("value"))
   }
 
   /** N-D FFT over a complete hyper-rectangular grid — numpy's
@@ -399,7 +364,7 @@ object Signal {
     val nd = dims.length
     require(nd >= 1, "need at least one dim")
     val vals = if (im == null) Seq(re) else Seq(re, im)
-    val g = gridify(df, keys, dims, vals, "fftNd", "", keepCoords = false)
+    val g = gridify(df, keys, dims, vals, "fftNd")
     val shapeArr = array((1 to nd).map(i => col(s"_n$i").cast("int")): _*)
     val imCol =
       if (im == null) expr("transform(_vals, x -> CAST(0.0 AS DOUBLE))")
@@ -410,13 +375,7 @@ object Signal {
       (keys.map(col) ++ (1 to nd).map(i => col(s"_n$i")) :+
         posexplode(arrays_zip(col("_out.re").as("re"), col("_out.im").as("im")))
           .as(Seq("_p", "_z"))): _*)
-    val withPos = (1 to nd).foldLeft(exploded) { (d, i) =>
-      val later = ((i + 1 to nd).map(j => s"_n$j") :+ "1").mkString(" * ")
-      d.withColumn(s"pos$i", expr(s"int((_p div ($later)) % _n$i)"))
-    }
-    withPos.select(
-      (keys.map(col) ++ (1 to nd).map(i => col(s"pos$i")) :+
-        col("_z.re").as("re") :+ col("_z.im").as("im")): _*)
+    selectGrid(exploded, keys, nd, i => s"_n$i", col("_z.re").as("re"), col("_z.im").as("im"))
   }
 
   def ifftNd(df: DataFrame, keys: Seq[String], dims: Seq[String],
@@ -502,7 +461,10 @@ object Signal {
   /** Collect each key group into a complete hyper-rectangular grid
     * over `dims`: keys ++ (`_vals<sfx>` row-major array<double>,
     * `_n1<sfx>`.. `_nN<sfx>` per-dim cardinalities). Shared by the
-    * literal-kernel and two-frame fftconvolve paths.
+    * literal-kernel and two-frame fftconvolve paths. The first value
+    * column lands in `_vals$sfx`, value i>0 in `_vals_i$sfx` — one
+    * groupBy carries all of them (a complex grid must NOT pay two
+    * shuffles for re and im).
     *
     * Per-dim cardinalities come from the collected array, NOT
     * countDistinct aggregates: multiple count-distincts force an
@@ -519,64 +481,42 @@ object Signal {
     * 2x2=4) while the reshape silently shifts every later value.
     */
   private def gridify(df: DataFrame, keys: Seq[String], dims: Seq[String],
-                      value: String, op: String, sfx: String = "",
-                      keepCoords: Boolean = false): DataFrame =
-    gridify(df, keys, dims, Seq(value), op, sfx, keepCoords)
-
-  /** Multi-value gridify: the first value column lands in `_vals$sfx`
-    * (the historical name every single-value grid op reads), value i>0
-    * in `_vals_i$sfx` — one groupBy carries all of them (a complex
-    * grid must NOT pay two shuffles for re and im).
-    */
-  private def gridify(df: DataFrame, keys: Seq[String], dims: Seq[String],
-                      values: Seq[String], op: String, sfx: String,
-                      keepCoords: Boolean): DataFrame = {
+                      values: Seq[String], op: String, sfx: String = "",
+                      keepCoords: Boolean = false): DataFrame = {
     val nd = dims.length
-    // Null handling mirrors [[seriesify]]: a null sample becomes NaN
-    // and propagates through the kernel; a row missing any grid
-    // coordinate cannot be placed and is dropped (it would otherwise
-    // become a null struct field that silently sorts first and
-    // corrupts the row-major reshape).
-    val packed = struct(
-      dims.zipWithIndex.map { case (d, i) => col(d).cast("double").as(s"c${i + 1}") } ++
-        values.zipWithIndex.map { case (v, i) =>
-          coalesce(col(v).cast("double"), lit(Double.NaN)).as(if (i == 0) "v" else s"v$i")
-        }: _*)
-    // same explicit-count spread as seriesify (round 22, guide §2.5)
-    val clean = keyedSpread(
-      df.filter(dims.map(col(_).isNotNull).reduce(_ && _)), keys)
-    val grouped = (1 to nd).foldLeft(
-      clean.groupBy(keys.map(col): _*)
-        .agg(array_sort(collect_list(packed)).as("_arr"))) { (g, i) =>
-      g.withColumn(s"_n$i$sfx",
-        expr(s"size(array_distinct(transform(_arr, s -> s.c$i)))"))
-    }
-    val sizeProd = (1 to nd).map(i => col(s"_n$i$sfx")).reduce(_ * _)
+    // Null handling mirrors [[seriesify]]: a null sample becomes NaN;
+    // a row missing any grid coordinate cannot be placed and is
+    // dropped (it would otherwise become a null struct field that
+    // silently sorts first and corrupts the row-major reshape).
+    val ns = (1 to nd).map(i => s"_n$i$sfx")
+    val sizeProd = ns.map(col).reduce(_ * _)
     val cellStruct = (1 to nd).map(i => s"s.c$i").mkString("struct(", ", ", ")")
     val cellsDistinct =
       size(expr(s"array_distinct(transform(_arr, s -> $cellStruct))")) ===
         size(col("_arr"))
     val gridOk = assert_true(sizeProd === size(col("_arr")) && cellsDistinct,
       concat(lit(s"$op: group is not a complete ${dims.mkString(" x ")} grid: "),
-        concat_ws(" x ", (1 to nd).map(i => col(s"_n$i$sfx").cast("string")): _*),
+        concat_ws(" x ", ns.map(col(_).cast("string")): _*),
         lit(" != "), size(col("_arr")).cast("string"),
         lit(" (or duplicate cells)")))
-    val withVals = values.indices.foldLeft(grouped) { (g, i) =>
-      val (name, fld) = if (i == 0) (s"_vals$sfx", "v") else (s"_vals_$i$sfx", s"v$i")
-      // the grid-completeness guard chains into the FIRST value column
-      // (enough to keep it unprunable — every grid op reads _vals)
-      val arr = expr(s"transform(_arr, s -> s.$fld)")
-      g.withColumn(name, if (i == 0) when(gridOk.isNull, arr) else arr)
+    // the grid-completeness guard chains into the FIRST value column
+    // (enough to keep it unprunable — every grid op reads _vals)
+    val vals = values.indices.map { i =>
+      if (i == 0) s"_vals$sfx" -> when(gridOk.isNull, field("v"))
+      else s"_vals_$i$sfx" -> field(s"v$i")
     }
     // sorted distinct coordinate values per dim — the axes a
     // coordinate-shifting op (fftshift) rotates alongside the values
-    val withCoords =
-      if (!keepCoords) withVals
-      else (1 to nd).foldLeft(withVals) { (g, i) =>
-        g.withColumn(s"_c$i$sfx",
-          expr(s"array_sort(array_distinct(transform(_arr, s -> s.c$i)))"))
-      }
-    withCoords.drop("_arr")
+    val axes =
+      if (!keepCoords) Nil
+      else (1 to nd).map(i => s"_c$i$sfx" -> array_sort(array_distinct(field(s"c$i"))))
+    assemble(df.filter(dims.map(col(_).isNotNull).reduce(_ && _)), keys,
+      dims.zipWithIndex.map { case (d, i) => s"c${i + 1}" -> col(d).cast("double") } ++
+        values.zipWithIndex.map { case (v, i) => (if (i == 0) "v" else s"v$i") -> nanIfNull(v) },
+      Nil,
+      ns.zipWithIndex.map { case (n, i) => n -> size(array_distinct(field(s"c${i + 1}"))) } ++
+        vals ++ axes)
+      .drop("_arr")
   }
 
   /** Two-frame join shape for the grid ops, mirroring
@@ -590,22 +530,38 @@ object Signal {
                              dims: Seq[String], value: String, op: String): DataFrame = {
     val in2Keyed = keys.nonEmpty &&
       in2.columns.toSet.intersect(keys.toSet).size == keys.size
-    val g2 = gridify(in2, if (in2Keyed) keys else Nil, dims, value, op, sfx = "_b")
+    val g2 = gridify(in2, if (in2Keyed) keys else Nil, dims, Seq(value), op, sfx = "_b")
     val bCols = (1 to dims.length).map(i => col(s"_n${i}_b")) :+ col("_vals_b")
     if (in2Keyed) g1.join(g2.select((keys.map(col) ++ bCols): _*), keys)
     else g1.crossJoin(broadcast(g2.select(bCols: _*)))
   }
 
-  /** posexplode a 2-D `_out` struct(cols, vals) back to long format. */
-  private def explodeGrid2d(withOut: DataFrame, keys: Seq[String]): DataFrame = {
-    val exploded = withOut.select(
-      (keys.map(col) ++ Seq(col("_out.cols").as("_oc"),
-        posexplode(col("_out.vals")).as(Seq("_p", "value")))): _*)
-    exploded
-      .withColumn("pos1", expr("_p div _oc").cast("int"))
-      .withColumn("pos2", (col("_p") % col("_oc")).cast("int"))
-      .select((keys.map(col) ++ Seq(col("pos1"), col("pos2"), col("value"))): _*)
+  /** Row-major unflatten of the flat grid index `_p`, dim i of N:
+    * pos_i = (_p div prod(size(i+1..N))) % size(i), where `size(i)` is
+    * the SQL for dim i's length (1-based). BIGINT arithmetic, so the
+    * size products cannot overflow; pos1 skips the modulus (_p is below
+    * the grid size), so size(1) is never read.
+    */
+  private def gridPos(i: Int, nd: Int, size: Int => String): Column = {
+    def big(j: Int) = s"CAST(${size(j)} AS BIGINT)"
+    val q = if (i == nd) "CAST(_p AS BIGINT)"
+      else (i + 1 to nd).map(big).mkString("(CAST(_p AS BIGINT) div (", " * ", "))")
+    expr(if (i == 1) s"CAST($q AS INT)" else s"CAST($q % ${big(i)} AS INT)").as(s"pos$i")
   }
+
+  /** keys, pos1..posN, `out` from a posexploded grid (see [[gridPos]]). */
+  private def selectGrid(exploded: DataFrame, keys: Seq[String], nd: Int,
+                         size: Int => String, out: Column*): DataFrame =
+    exploded.select((keys.map(col) ++ (1 to nd).map(gridPos(_, nd, size)) ++ out): _*)
+
+  /** posexplode a grid kernel's `_out` struct back to long format: keys,
+    * pos1..posN, value. `shape` names the struct field that carries the
+    * grid's sizes and `size` reads dim i's length from it (`_osh`).
+    */
+  private def explodeGrid(withOut: DataFrame, keys: Seq[String], nd: Int,
+                          shape: String, size: Int => String): DataFrame =
+    selectGrid(withOut.select((keys.map(col) :+ col(s"_out.$shape").as("_osh") :+
+      posexplode(col("_out.vals")).as(Seq("_p", "value"))): _*), keys, nd, size, col("value"))
 
   /** 2-D FFT convolution over two core dims — the reference's
     * multi-dim `fftconvolve(dims=[d1, d2])` (signal.py:51). The group
@@ -616,10 +572,10 @@ object Signal {
   def fftconvolve2d(df: DataFrame, keys: Seq[String], dim1: String, dim2: String,
                     value: String, kernel: Array[Double], kernelRows: Int,
                     mode: String = "full"): DataFrame = {
-    val withOut = gridify(df, keys, Seq(dim1, dim2), value, "fftconvolve2d")
+    val withOut = gridify(df, keys, Seq(dim1, dim2), Seq(value), "fftconvolve2d")
       .withColumn("_out", fftconvolve2dC(col("_vals"), col("_n1"),
         typedLit(kernel), lit(kernelRows), mode))
-    explodeGrid2d(withOut, keys)
+    explodeGrid(withOut, keys, 2, "cols", _ => "_osh")
   }
 
   /** scipy.signal.correlate2d (literal kernel): cross-correlation is
@@ -643,11 +599,11 @@ object Signal {
   def fftconvolve2d(in1: DataFrame, in2: DataFrame, keys: Seq[String],
                     dim1: String, dim2: String, value: String,
                     mode: String): DataFrame = {
-    val g1 = gridify(in1, keys, Seq(dim1, dim2), value, "fftconvolve2d")
+    val g1 = gridify(in1, keys, Seq(dim1, dim2), Seq(value), "fftconvolve2d")
     val joined = joinSecondGrid(g1, in2, keys, Seq(dim1, dim2), value, "fftconvolve2d")
     val withOut = joined.withColumn("_out", fftconvolve2dC(col("_vals"), col("_n1"),
       col("_vals_b"), col("_n1_b"), mode))
-    explodeGrid2d(withOut, keys)
+    explodeGrid(withOut, keys, 2, "cols", _ => "_osh")
   }
 
   /** N-D FFT convolution over three or more core dims — the
@@ -668,11 +624,11 @@ object Signal {
     require(kernelShape.length == nd && kernelShape.product == kernel.length,
       s"kernel shape ${kernelShape.mkString("x")} does not match " +
         s"kernel length ${kernel.length}")
-    val grouped = gridify(df, keys, dims, value, "fftconvolveNd")
+    val grouped = gridify(df, keys, dims, Seq(value), "fftconvolveNd")
     val shapeArr = array((1 to nd).map(i => col(s"_n$i")): _*)
     val withOut = grouped.withColumn("_out", fftconvolveNdC(col("_vals"), shapeArr,
       typedLit(kernel), typedLit(kernelShape), mode))
-    explodeGridNd(withOut, keys, nd)
+    explodeGrid(withOut, keys, nd, "shape", i => s"element_at(_osh, $i)")
   }
 
   /** Two-frame N-D FFT convolution — the reference's full
@@ -683,30 +639,13 @@ object Signal {
                     dims: Seq[String], value: String, mode: String): DataFrame = {
     val nd = dims.length
     require(nd >= 1, "need at least one dim")
-    val g1 = gridify(in1, keys, dims, value, "fftconvolveNd")
+    val g1 = gridify(in1, keys, dims, Seq(value), "fftconvolveNd")
     val joined = joinSecondGrid(g1, in2, keys, dims, value, "fftconvolveNd")
     val shape1 = array((1 to nd).map(i => col(s"_n$i")): _*)
     val shape2 = array((1 to nd).map(i => col(s"_n${i}_b")): _*)
     val withOut = joined.withColumn("_out", fftconvolveNdC(col("_vals"), shape1,
       col("_vals_b"), shape2, mode))
-    explodeGridNd(withOut, keys, nd)
-  }
-
-  /** posexplode an N-D `_out` struct(shape, vals) back to long format:
-    * pos_i = (flat div prod(shape[i+1..])) % shape[i], row-major.
-    */
-  private def explodeGridNd(withOut: DataFrame, keys: Seq[String], nd: Int): DataFrame = {
-    val exploded = withOut.select(
-      (keys.map(col) ++ Seq(col("_out.shape").as("_osh"),
-        posexplode(col("_out.vals")).as(Seq("_p", "value")))): _*)
-    def shEl(i: Int) = s"CAST(element_at(_osh, ${i + 1}) AS BIGINT)"
-    val posCols = (0 until nd).map { i =>
-      val tailProd = if (i == nd - 1) "CAST(1 AS BIGINT)"
-        else ((i + 1) until nd).map(shEl).mkString("(", " * ", ")")
-      expr(s"CAST((CAST(_p AS BIGINT) div $tailProd) % ${shEl(i)} AS INT)")
-        .as(s"pos${i + 1}")
-    }
-    exploded.select((keys.map(col) ++ posCols :+ col("value")): _*)
+    explodeGrid(withOut, keys, nd, "shape", i => s"element_at(_osh, $i)")
   }
 
   /** Cross-correlation (scipy.signal.correlate): convolve with the
@@ -765,6 +704,64 @@ object Signal {
       Seq("re" -> col("_out.re"), "im" -> col("_out.im")))
   }
 
+  /** Long series cut into `chunkSize`-sample chunks, the shared front
+    * half of [[convolveLong]] and [[welchLong]]: one row per (keys,
+    * `_c`) with `_vals` (the chunk's samples in order), `_start` (the
+    * index of its first sample), `_gn` (series length) and
+    * `_gmin`/`_gmax` (series coordinate span). Samples within `halo` of
+    * a chunk boundary are copied across it: into the next chunk when
+    * `haloToNext` (an output near a chunk's start needs the previous
+    * chunk's tail), else into the previous one (a segment starting near
+    * a chunk's end reads into the next chunk).
+    *
+    * Sample index from a per-key RANK (row_number over the coordinate
+    * order), not coordinate arithmetic: real-world coordinates are
+    * jittered/non-equispaced (event timestamps), so
+    * round((t-cmin)/delta) silently collapses distinct samples onto
+    * one index and corrupts chunk contents. row_number is a
+    * running-frame window — WindowExec streams it after the
+    * per-partition sort, no whole-partition buffer — and the series
+    * stats come from a small groupBy aggregate joined back (NOT a
+    * whole-partition count(*) window, which would buffer every
+    * series). Net: two hash exchanges on the keys, the stats
+    * aggregate's and the window's; the chunk groupBy reuses the
+    * window's partitioning.
+    */
+  private def chunked(df: DataFrame, keys: Seq[String], dim: String, value: String,
+                      chunkSize: Int, halo: Int, haloToNext: Boolean): DataFrame = {
+    // mirror seriesify's null contract (bit-identical parity with the
+    // direct path): null coordinates cannot be placed on the axis and
+    // are dropped; null samples become NaN and flow through the kernel
+    val clean = df.filter(col(dim).isNotNull).withColumn(value, nanIfNull(value))
+    val stats = clean.groupBy(keys.map(col): _*).agg(
+      count(lit(1)).as("_n"),
+      min(col(dim).cast("double")).as("_cmin"),
+      max(col(dim).cast("double")).as("_cmax"))
+    val withStats =
+      if (keys.isEmpty) clean.crossJoin(broadcast(stats))
+      else clean.join(stats, keys)
+    // (coord, value) order, not coord alone: seriesify sorts
+    // struct(c, v) lexicographically, so on duplicate coordinates the
+    // chunked path must rank identically or its chunk contents diverge
+    // from the direct path (and the oracle's ORDER BY t, value)
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(keys.map(col): _*)
+      .orderBy(col(dim).cast("double"), col(value))
+    val c0 = expr(s"_j div $chunkSize")
+    val copied =
+      if (haloToNext)
+        when(col("_j") % chunkSize >= chunkSize - halo &&
+          c0 + 1 <= expr(s"(_n - 1) div $chunkSize"), array(c0, c0 + 1))
+      else when(col("_j") % chunkSize <= halo - 1 && c0 >= 1, array(c0 - 1, c0))
+    val idx = withStats
+      .withColumn("_j", (row_number().over(w) - lit(1)).cast("long"))
+      .withColumn("_c", explode(copied.otherwise(array(c0))))
+    assemble(idx, keys :+ "_c", Seq("j" -> col("_j"), "v" -> col(value)),
+      Seq(min(col("_j")).as("_start"), max(col("_n")).as("_gn"),
+        max(col("_cmin")).as("_gmin"), max(col("_cmax")).as("_gmax")),
+      Seq("_vals" -> field("v")))
+  }
+
   /** Overlap-save chunked convolution (SURVEY.md §4): the scale path
     * for series whose core dim does not fit one task — something the
     * reference's dask layer cannot do at all (it forbids chunking the
@@ -782,48 +779,7 @@ object Signal {
     val m = kernel.length
     require(m >= 1, "kernel must be non-empty")
     require(chunkSize > m - 1, s"chunkSize $chunkSize must exceed kernel halo ${m - 1}")
-    val h = m - 1
-    // Sample index from a per-key RANK (row_number over the coordinate
-    // order), not coordinate arithmetic: real-world coordinates are
-    // jittered/non-equispaced (event timestamps), so
-    // round((t-cmin)/delta) silently collapses distinct samples onto
-    // one index and corrupts chunk contents. row_number is a
-    // running-frame window — WindowExec streams it after the
-    // per-partition sort, no whole-partition buffer — and the series
-    // length _n comes from a small groupBy aggregate joined back (NOT a
-    // whole-partition count(*) window, which would buffer every
-    // series). Net: one hash exchange on the keys reused by both the
-    // join and the window, plus the chunk groupBy.
-    // mirror seriesify's null contract (bit-identical parity with the
-    // direct path): null coordinates cannot be placed on the axis and
-    // are dropped; null samples become NaN and flow through the kernel
-    val clean = df
-      .filter(col(dim).isNotNull)
-      .withColumn(value, coalesce(col(value).cast("double"), lit(Double.NaN)))
-    val stats = clean.groupBy(keys.map(col): _*).agg(count(lit(1)).as("_n"))
-    val withStats =
-      if (keys.isEmpty) clean.crossJoin(broadcast(stats))
-      else clean.join(stats, keys)
-    // (coord, value) order, not coord alone: seriesify sorts
-    // struct(c, v) lexicographically, so on duplicate coordinates the
-    // chunked path must rank identically or its chunk contents diverge
-    // from the direct convolve (and the oracle's ORDER BY t, value)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(dim).cast("double"), col(value))
-    val c0 = expr(s"_j div $chunkSize")
-    val cmax = expr(s"(_n - 1) div $chunkSize")
-    val idx = withStats
-      .withColumn("_j", (row_number().over(w) - lit(1)).cast("long"))
-      .withColumn("_c", explode(
-        when(col("_j") % chunkSize >= chunkSize - h && c0 + 1 <= cmax,
-          array(c0, c0 + 1)).otherwise(array(c0))))
-    val grouped = idx
-      .groupBy((keys.map(col) :+ col("_c")): _*)
-      .agg(
-        expr(s"transform(array_sort(collect_list(named_struct('j', _j, 'v', $value))), s -> s.v)").as("_vals"),
-        min(col("_j")).as("_start"),
-        max(col("_n")).as("_gn"))
+    val grouped = chunked(df, keys, dim, value, chunkSize, m - 1, haloToNext = true)
       .withColumn("_out", convolveC(col("_vals"), typedLit(kernel), "full", method))
     val exploded = grouped.select(
       (keys.map(col) ++ Seq(col("_c"), col("_start"), col("_gn"),
@@ -1062,16 +1018,11 @@ object Signal {
             reCol: String = "re", imCol: String = "im"): DataFrame = {
     require(w > 0 && h > 0 && h <= w, "need 0 < hop <= window")
     val wts = graft.dsp.Resample.periodicWindow(window, w)
-    val packed = struct(
-      col(winCol).cast("int").as("k"), col(binCol).cast("int").as("b"),
-      col(reCol).cast("double").as("re"), col(imCol).cast("double").as("im"))
-    val grouped = df.groupBy(keys.map(col): _*)
-      .agg(array_sort(collect_list(packed)).as("_arr"),
-        (max(col(winCol)).cast("int") + 1).as("_nw"))
-    val out = grouped
-      .withColumn("_y", istftC(
-        expr("transform(_arr, s -> s.re)"), expr("transform(_arr, s -> s.im)"),
-        col("_nw"), w, h, typedLit(wts)))
+    val out = assemble(df, keys,
+        Seq("k" -> col(winCol).cast("int"), "b" -> col(binCol).cast("int"),
+          "re" -> col(reCol).cast("double"), "im" -> col(imCol).cast("double")),
+        Seq((max(col(winCol)).cast("int") + 1).as("_nw")),
+        Seq("_y" -> istftC(field("re"), field("im"), col("_nw"), w, h, typedLit(wts))))
     explodeSeries(out, keys, Seq("value" -> col("_y")))
   }
 
@@ -1372,38 +1323,7 @@ object Signal {
     val wts = graft.dsp.Resample.periodicWindow(window, nperseg)
     var w2 = 0.0
     wts.foreach(v => w2 += v * v)
-    // long-format chunking exactly as convolveLong: rank-based sample
-    // index, per-key stats joined back, halo rows replicated — but the
-    // halo points FORWARD (a segment starting near a chunk's end reads
-    // into the next chunk), so rows with _j % C <= nperseg-2 replicate
-    // DOWN to the previous chunk
-    val clean = df
-      .filter(col(dim).isNotNull)
-      .withColumn(value, coalesce(col(value).cast("double"), lit(Double.NaN)))
-    val stats = clean.groupBy(keys.map(col): _*).agg(
-      count(lit(1)).as("_n"),
-      min(col(dim).cast("double")).as("_cmin"),
-      max(col(dim).cast("double")).as("_cmax"))
-    val withStats =
-      if (keys.isEmpty) clean.crossJoin(broadcast(stats))
-      else clean.join(stats, keys)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(keys.map(col): _*)
-      .orderBy(col(dim).cast("double"), col(value))
-    val c0 = expr(s"_j div $chunkSize")
-    val idx = withStats
-      .withColumn("_j", (row_number().over(w) - lit(1)).cast("long"))
-      .withColumn("_c", explode(
-        when(col("_j") % chunkSize <= nperseg - 2 && c0 >= 1,
-          array(c0 - 1, c0)).otherwise(array(c0))))
-    val grouped = idx
-      .groupBy((keys.map(col) :+ col("_c")): _*)
-      .agg(
-        expr(s"transform(array_sort(collect_list(named_struct('j', _j, 'v', $value))), s -> s.v)").as("_vals"),
-        min(col("_j")).as("_start"),
-        max(col("_n")).as("_gn"),
-        max(col("_cmin")).as("_gmin"),
-        max(col("_cmax")).as("_gmax"))
+    val grouped = chunked(df, keys, dim, value, chunkSize, nperseg - 1, haloToNext = false)
       .withColumn("_acc", welchPartialC(col("_vals"), col("_start"), chunkSize,
         nperseg, hop, typedLit(wts), demean))
     val parts = grouped.select(
@@ -1581,18 +1501,12 @@ object Signal {
     } else {
       // sort peaks and prominence triples together on the peak index
       // so the arrays stay parallel after collect_list
-      val packed = struct(col(peakCol).cast("int").as("p"),
-        col("prominence").cast("double").as("pr"),
-        col("left_base").cast("int").as("lb"),
-        col("right_base").cast("int").as("rb"))
-      val pk = prominenceData
-        .groupBy(keys.map(col): _*)
-        .agg(array_sort(collect_list(packed)).as("_pp"))
-        .withColumn("_pk", expr("transform(_pp, s -> s.p)"))
-        .withColumn("_prom", expr("transform(_pp, s -> s.pr)"))
-        .withColumn("_lb", expr("transform(_pp, s -> s.lb)"))
-        .withColumn("_rb", expr("transform(_pp, s -> s.rb)"))
-        .drop("_pp")
+      val pk = assemble(prominenceData, keys,
+        Seq("p" -> col(peakCol).cast("int"), "pr" -> col("prominence").cast("double"),
+          "lb" -> col("left_base").cast("int"), "rb" -> col("right_base").cast("int")),
+        Nil, Seq("_pk" -> field("p"), "_prom" -> field("pr"), "_lb" -> field("lb"),
+          "_rb" -> field("rb")))
+        .drop("_arr")
       val withOut = sdf.join(pk, keys).withColumn("_pw",
         peakWidthsPC(col(value), col("_pk"), lit(relHeight),
           col("_prom"), col("_lb"), col("_rb")))

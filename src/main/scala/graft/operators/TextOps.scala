@@ -234,7 +234,6 @@ object TextOps {
   def bpeTrain(df: DataFrame, textCol: String, nMerges: Int,
                localThreshold: Long = 200000L): Array[(String, String, Long)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    graft.functions.Functions.install(df.sparkSession)
     val init = wordTypes(df, textCol)
       .withColumn("syms", expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"))
     // Driver fast path (optimization round 21 — the byte trainer got
@@ -335,7 +334,6 @@ object TextOps {
     */
   def bpeEncodeCounts(df: DataFrame, textCol: String, idCol: String,
                       merges: Array[(String, String)]): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     val mL = typedLit(merges.map(_._1))
     val mR = typedLit(merges.map(_._2))
     df.select(col(idCol), explode_outer(expr(
@@ -353,7 +351,6 @@ object TextOps {
     */
   def bpeTokenize(df: DataFrame, textCol: String,
                   merges: Array[(String, String)]): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     val mL = typedLit(merges.map(_._1))
     val mR = typedLit(merges.map(_._2))
     df.withColumn("bpe", flatten(transform(
@@ -439,7 +436,6 @@ object TextOps {
                     localThreshold: Long = 200000L
                    ): Array[(Array[Byte], Array[Byte], Long)] = {
     require(nMerges >= 1, s"nMerges must be >= 1, got $nMerges")
-    graft.functions.Functions.install(df.sparkSession)
     val init = df
       .select(explode(filter(split(col(textCol), "\\s+"),
         w => length(w) > 0)).as("word"))
@@ -576,7 +572,6 @@ object TextOps {
     */
   def bpeBytesRoundtrip(df: DataFrame, textCol: String,
                         merges: Array[(Array[Byte], Array[Byte])]): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     val mL = typedLit(merges.map(_._1))
     val mR = typedLit(merges.map(_._2))
     df.withColumn("decoded", array_join(transform(
@@ -679,7 +674,6 @@ object TextOps {
     require(shrinkKeep > 0.0 && shrinkKeep < 1.0,
       s"shrinkKeep must be in (0,1), got $shrinkKeep")
     require(finalRounds >= 1, s"finalRounds must be >= 1, got $finalRounds")
-    graft.functions.Functions.install(df.sparkSession)
     val dbg0 = sys.env.contains("SPARK_GRAFT_UNIGRAM_DEBUG")
     var tPhase = System.nanoTime()
     def phase(name: String): Unit = if (dbg0) {
@@ -898,7 +892,6 @@ object TextOps {
     */
   def unigramEncode(df: DataFrame, textCol: String,
                     pieces: Array[(String, Long, Long)]): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     val ps = typedLit(pieces.map(_._1).toSeq)
     val lq = typedLit(pieces.map(_._3).toSeq)
     df.withColumn("unigram_tokens", flatten(transform(
@@ -929,7 +922,6 @@ object TextOps {
     */
   def fingerprintFrame(df: DataFrame, textCol: String, idCol: String,
                        k: Int = 8, w: Int = 4): DataFrame = {
-    graft.functions.Functions.install(df.sparkSession)
     df.select(col(idCol), explode(winnowC(normalize(col(textCol)), k, w)).as("fp"))
   }
 
@@ -1361,7 +1353,6 @@ object TextOps {
     // under the ASCII class every Cyrillic/Greek/Arabic/CJK word
     // counted as non-alphabetic and r_alpha silently killed
     // non-Latin documents.
-    graft.functions.Functions.install(df.sparkSession)
     val tn = lower(graft.functions.Functions.dsl.nfcC(col(textCol)))
     val ws = filter(split(tn, "\\s+"), w => w =!= "")
     val t = col(textCol)

@@ -151,6 +151,17 @@ class PlanShapeSpec extends SparkTestBase {
       Array(0.5, 0.5), chunkSize = 32)) == 2)
   }
 
+  test("welchLong pays three hash shuffles on a small input (stats aggs + one window)") {
+    // the bins and the per-series segment count each run the chunk
+    // pipeline and pay its per-key stats exchange; the count leg also
+    // pays the window/chunk exchange, while in the bins leg this tiny
+    // input is the broadcast side of the stats join, so its window
+    // reuses the stats aggregate's partitioning. The chunk groupBy and
+    // the per-(key, bin) sums reuse the window's partitioning.
+    assert(hashExchanges(Signal.welchLong(series, Seq("k"), "t", "v",
+      nperseg = 16, chunkSize = 32)) == 3)
+  }
+
   test("sampling/coverage shuffle budget: rates=0, quota=1, common-ngrams=4") {
     val strat = docs.withColumn("lang", expr("CASE WHEN doc_id % 2 = 0 THEN 'a' ELSE 'b' END"))
     // pure map-side filter: the whole point of hash-threshold sampling

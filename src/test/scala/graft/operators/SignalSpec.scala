@@ -522,6 +522,62 @@ class SignalSpec extends SparkTestBase {
     assert(maxDiff(rows.map(_.getDouble(1)), widths) < 1e-12)
   }
 
+  test("peakWidthsAt with prominenceData reproduces the auto path's widths") {
+    // the prominences the auto path computes, handed in shuffled: the
+    // packed sort must keep each triple parallel to its peak
+    val given = for {
+      k <- Seq("a", "b")
+      x = series(k, "x")
+      p <- graft.dsp.Peaks.localMaxima(x)
+      pr = graft.dsp.Peaks.prominence(x, p)
+    } yield (k, p, pr.prominence, pr.leftBase, pr.rightBase)
+    assert(given.map(_._1).distinct.size == 2)
+    val pd = new scala.util.Random(7).shuffle(given)
+      .toDF("k", "peak", "prominence", "left_base", "right_base")
+    val df = longDf.filter($"k" =!= "c")
+    val peaks = pd.select("k", "peak")
+    def widths(out: DataFrame): Seq[Row] = out.orderBy("k", "pos")
+      .select("k", "peak", "width", "width_height", "left_ip", "right_ip").collect().toSeq
+    val auto = widths(Signal.peakWidthsAt(df, peaks, Seq("k"), "t", "x"))
+    assert(auto.size == given.size)
+    assert(widths(Signal.peakWidthsAt(df, peaks, Seq("k"), "t", "x",
+      prominenceData = pd)) == auto)
+  }
+
+  test("Signal ops run on a fresh session where Functions.install never ran") {
+    def rfftOn(s: org.apache.spark.sql.SparkSession): Seq[Row] = {
+      val grouped = s.createDataFrame(Seq(
+        ("a", Seq(0.0, 0.5, 1.0, 1.5), Seq(1.0, 2.0, 0.0, -1.0)),
+        ("b", Seq(2.0, 3.0, 4.0), Seq(0.5, 0.25, 0.125))))
+        .toDF("k", "cs", "x")
+      Signal.rfft(Signal.fromGrouped(grouped, "cs"), Seq("k"), "t", "x")
+        .orderBy("k", "pos").collect().toSeq
+    }
+    val fresh = rfftOn(spark.newSession())
+    assert(fresh.size == 5)
+    assert(fresh == rfftOn(spark))
+  }
+
+  test("sig_rfft_pregrouped on a fresh session reads back its materialized input") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_pregrouped").toFile
+    spark.range(0, 240)
+      .selectExpr("id % 4 AS user_id", "id * 1000000000 AS ts", "sin(id * 0.7) AS value")
+      .write.parquet(s"$dir/events.parquet")
+    def run(): Seq[Row] = graft.queries.Sig.queries("sig_rfft_pregrouped")(
+      spark.newSession(), dir.getPath).collect().toSeq
+    val tag = dir.getPath.replaceAll("[^A-Za-z0-9.]", "_")
+    try {
+      val first = run() // materializes the pre-grouped copy
+      assert(first.size == 4 * 31)
+      assert(run() == first) // a later session only reads it back
+    } finally {
+      val copies = Option(new java.io.File("/tmp/graft_grouped").listFiles).toSeq.flatten
+      (copies.filter(_.getName.startsWith(s"$tag-")) :+ dir).foreach { f =>
+        org.apache.commons.io.FileUtils.deleteDirectory(f)
+      }
+    }
+  }
+
   test("sql surface: graft_* functions callable from spark.sql") {
     val r = spark.sql(
       "SELECT graft_rfft(array(1.0d, 2.0d, 3.0d, 4.0d), -1, 'backward') AS s").collect()(0)
