@@ -1,7 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType,
+  StructField, StructType}
 
 import graft.Tables
 import graft.Tables.{fp2, fp6, fpSql}
@@ -15,30 +18,42 @@ import graft.streaming.Streaming
   * oracle is the BATCH recursive-CTE twin — passing proves the
   * streaming operator's carried state reproduces the batch semantics
   * sample-for-sample, not just "rows came out".
+  *
+  * The state-store provider is Spark's own
+  * `spark.sql.streaming.stateStore.providerClass`; every oracle here
+  * passes under the default and the RocksDB provider.
   */
 object Stream {
 
-  /** events.parquet as a bounded file-source stream of [[Streaming.Event]].
-    * ts arrives as a nanos long ([[Tables.tsToNanos]] normalizes either
-    * testdata generation); `timestamp_micros(ts div 1000)` reproduces
-    * the µs truncation every batch oracle uses, so stream and oracle
-    * see identical coordinates.
+  /** `<dir>/<table>.parquet` as a bounded file-source stream. The file
+    * source wants a directory, so it streams the sf dir with a glob
+    * filter selecting just that table's file.
     */
-  private def eventStream(s: SparkSession, dir: String) = {
-    import s.implicits._
+  private def tableStream(s: SparkSession, dir: String, table: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val path = s"$dir/events.parquet"
-    val schema = s.read.parquet(path).schema
-    // the file source wants a directory: stream the sf dir with a
-    // glob filter selecting just the events table file(s)
-    Tables.tsToNanos(
-      s.readStream.schema(schema).option("pathGlobFilter", "events.parquet")
-        .parquet(dir))
-      .select(col("user_id"),
-        timestamp_micros(expr("ts div 1000")).as("ts"),
+    val file = s"$table.parquet"
+    s.readStream.schema(s.read.parquet(s"$dir/$file").schema)
+      .option("pathGlobFilter", file).parquet(dir)
+  }
+
+  /** A stream with a nanos-long `ts` as [[Streaming.Event]]s:
+    * `timestamp_micros(ts div 1000)` reproduces the µs truncation every
+    * batch oracle uses, so stream and oracle see identical coordinates.
+    */
+  private def asEvents(df: DataFrame, tsNs: String = "ts"): Dataset[Streaming.Event] = {
+    import df.sparkSession.implicits._
+    df.select(col("user_id"),
+        timestamp_micros(expr(s"$tsNs div 1000")).as("ts"),
         col("event_type"), col("value"))
       .as[Streaming.Event]
   }
+
+  /** events.parquet as a bounded file-source stream of [[Streaming.Event]].
+    * ts arrives as a nanos long ([[Tables.tsToNanos]] normalizes either
+    * testdata generation).
+    */
+  private def eventStream(s: SparkSession, dir: String) =
+    asEvents(Tables.tsToNanos(tableStream(s, dir, "events")))
 
   /** events.parquet re-materialized as `nFiles` time-ordered slices
     * with strictly increasing mtimes (one file per future micro-batch)
@@ -53,7 +68,6 @@ object Stream {
     */
   private def slicedEventStream(s: SparkSession, dir: String, nFiles: Int,
                                 glob: String = "ev_*.parquet") = {
-    import s.implicits._
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tag = dir.replaceAll("[^A-Za-z0-9.]", "_")
     val fpTag = Tables.pathFingerprint(s"$dir/events.parquet")
@@ -79,11 +93,10 @@ object Stream {
       // Keeping the harness warning-free means a real single-partition
       // WindowExec regression stays visible in logs.
       val sorted = ev.sort(expr("ts div 1000"), col("user_id"), col("value"))
-      val idxSchema = sorted.schema
-        .add("_rn", org.apache.spark.sql.types.LongType)
+      val idxSchema = sorted.schema.add("_rn", LongType)
       val idx = s.createDataFrame(
-          sorted.rdd.zipWithIndex.map { case (r, i) =>
-            org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, idxSchema)
+          sorted.rdd.zipWithIndex().map { case (r, i) =>
+            Row.fromSeq(r.toSeq :+ i) }, idxSchema)
         .withColumn("_c", expr(s"_rn div $chunk"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       scratch.mkdirs()
@@ -105,25 +118,12 @@ object Stream {
     // not the source file (whose ts may be TimestampType)
     val schema = s.read.option("pathGlobFilter", "ev_*.parquet")
       .parquet(root.getAbsolutePath).schema
-    s.readStream.schema(schema)
+    asEvents(s.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", glob)
-      .parquet(root.getAbsolutePath)
-      .select(col("user_id"),
-        timestamp_micros(expr("ts div 1000")).as("ts"),
-        col("event_type"), col("value"))
-      .as[Streaming.Event]
+      .parquet(root.getAbsolutePath))
   }
 
-  /** Run a streaming Dataset to completion into a temp PARQUET sink
-    * and read the files back — the same executor-side file sink a
-    * production deployment writes, so nothing in the verification
-    * path collects rows to the driver. Append-mode queries use the
-    * parquet file sink directly; `complete` mode (which the file sink
-    * cannot express) goes through foreachBatch overwriting the same
-    * path, the standard micro-batch-sink pattern for full-result
-    * refresh.
-    */
   /** Temp sink/checkpoint trees awaiting recursive cleanup at JVM exit
     * (deferred that long because the returned DataFrame lazily reads
     * the sink files; deleteOnExit only removes empty dirs). ONE shared
@@ -161,107 +161,138 @@ object Stream {
     *
     * Measured on stream_join (12-slice interval join, sf0.1):
     * 15.6–55 s → 7.6 s; per-batch state commitTimeMs 3400 → 31 ms.
-    * Both knobs are env-overridable because the trade-off is
-    * deployment-specific: on HDFS the FileContext manager's atomic
-    * rename contract and end-to-end checksums are worth their cost;
-    * on POSIX-local or object-store checkpoint volumes `File.renameTo`
-    * is already atomic and the extra integrity layer is redundant.
+    *
+    * Scheme-gated (ADVICE r21 medium): the tuning (checksums off,
+    * rename-based FileSystem manager) applies ONLY when the checkpoint
+    * volume is a local `file://` path — the deployment the
+    * measurements were taken on and the one where the defaults are
+    * redundant (ChecksumFileSystem .crc sidecars, atomic
+    * File.renameTo). On HDFS/object-store checkpoint volumes Spark's
+    * own defaults (the FileContext manager's atomic-rename contract +
+    * end-to-end checksums) stay in force, and any earlier local-path
+    * override is explicitly reverted so a mixed-volume session can't
+    * leak the weaker config across queries.
     */
-  /** Every declared stream in this file checkpoints under the JVM temp
-    * dir (Files.createTempDirectory), so the 1-arg form gates on that
-    * volume — callers with a different checkpoint volume use the 2-arg
-    * form with the real path.
-    */
-  private[queries] def tuneCheckpointIo(spark: SparkSession): Unit =
-    tuneCheckpointIo(spark, System.getProperty("java.io.tmpdir", "/tmp"))
-
-  /** Scheme-gated variant (ADVICE r21 medium): the POSIX-local tuning
-    * (checksums off, rename-based FileSystem manager) applies ONLY when
-    * the checkpoint volume is a local `file://` path — the deployment
-    * the measurements were taken on and the one where the defaults are
-    * redundant (ChecksumFileSystem .crc sidecars, atomic File.renameTo).
-    * On HDFS/object-store checkpoint volumes Spark's own defaults (the
-    * FileContext manager's atomic-rename contract + end-to-end
-    * checksums) stay in force, and any earlier local-path override is
-    * explicitly reverted so a mixed-volume session can't leak the
-    * weaker config across queries. Env vars still force either way.
-    */
-  private[queries] def tuneCheckpointIo(spark: SparkSession,
-                                        chkPath: String): Unit = {
+  private def tuneCheckpointIo(spark: SparkSession, chkPath: String): Unit = {
     val scheme = Option(new org.apache.hadoop.fs.Path(chkPath).toUri.getScheme)
       .getOrElse("file")
     val local = scheme == "file"
-    val checksum = sys.env.get("SPARK_GRAFT_CHECKPOINT_CHECKSUM")
-      .getOrElse(if (local) "false" else "true")
-    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled", checksum)
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_FILE_MANAGER") match {
-      case Some(cls) =>
-        spark.conf.set("spark.sql.streaming.checkpointFileManagerClass", cls)
-      case None if local =>
-        spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-          "org.apache.spark.sql.execution.streaming.checkpointing." +
-            "FileSystemBasedCheckpointFileManager")
-      case None =>
-        spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+    spark.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
+      (!local).toString)
+    if (local)
+      spark.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+        "org.apache.spark.sql.execution.streaming.checkpointing." +
+          "FileSystemBasedCheckpointFileManager")
+    else spark.conf.unset("spark.sql.streaming.checkpointFileManagerClass")
+  }
+
+  /** Shuffle width while a stream runs, sized by STATE VOLUME, not by
+    * the batch side's shuffle default: every stateful operator commits
+    * one store per partition per micro-batch (a symmetric join commits
+    * FOUR), so partitions × stores × batches delta-file fsyncs dominate
+    * wall time when per-partition state is small. The checkpoint pins
+    * the count for the query's lifetime either way — production picks
+    * it the same way, by state-per-partition. The foreachBatch manifest
+    * sinks run their per-micro-batch work at the same width
+    * (optimization round 22): a delta-sized frame otherwise inherits
+    * the session's full-corpus shuffle count.
+    */
+  private val StateWidth = "8"
+
+  /** One stream run's scope: a temp dir for its sink, table and
+    * checkpoint (removed at JVM exit), checkpoint-I/O tuning for that
+    * volume, and the [[StateWidth]] override.
+    */
+  private final class Run(s: SparkSession, name: String) {
+    private val dir =
+      java.nio.file.Files.createTempDirectory(s"graft-$name-").toFile
+    cleanupHookInstalled
+    pendingTmp.add(dir)
+    tuneCheckpointIo(s, dir.getAbsolutePath)
+
+    def path(leaf: String): String = new java.io.File(dir, leaf).getAbsolutePath
+    val chk: String = path("chk")
+
+    /** `body` at [[StateWidth]]. The session's width is restored after,
+      * so batch queries and the returned (full-table) frames keep the
+      * session default; the stateful partitioning is locked into
+      * checkpoint metadata at the first batch.
+      */
+    def atStateWidth[T](body: => T): T = {
+      val prev = s.conf.get("spark.sql.shuffle.partitions")
+      s.conf.set("spark.sql.shuffle.partitions", StateWidth)
+      try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    }
+
+    def drain(q: StreamingQuery): Unit =
+      try q.processAllAvailable() finally q.stop()
+
+    /** The idempotent foreachBatch sink: each micro-batch lands in its
+      * own `out/batch=<id>` directory with overwrite mode, so a replayed
+      * batch overwrites its own previous (possibly partial) output
+      * instead of appending duplicates.
+      */
+    def startBatchKeyed(df: DataFrame, out: String): StreamingQuery =
+      df.writeStream.option("checkpointLocation", chk)
+        .foreachBatch { (batch: DataFrame, id: Long) =>
+          batch.write.mode("overwrite").parquet(s"$out/batch=$id")
+        }.start()
+
+    /** Crash simulation: run `first` to completion, hand `gate` the
+      * number of committed batches, delete the newest `commits/<n>`
+      * marker — exactly the state a JVM kill between sink write and
+      * checkpoint commit leaves behind — then run `restart` on the same
+      * checkpoint and assert it replayed and re-committed that batch.
+      */
+    def crashAndReplay(first: => StreamingQuery, restart: => StreamingQuery,
+                       unit: String = "batch")(gate: Int => Unit): Unit = {
+      drain(first)
+      val commitsDir = new java.io.File(chk, "commits")
+      val commits = Option(commitsDir.listFiles()).getOrElse(Array.empty)
+        .filter(_.getName.forall(_.isDigit))
+      gate(commits.length)
+      require(commits.nonEmpty, "phase 1 committed no batches")
+      val latest = commits.maxBy(_.getName.toInt)
+      val crashedId = latest.getName
+      require(latest.delete(), s"could not delete commit marker $crashedId")
+      // the local ChecksumFs keeps a .<n>.crc sidecar; a leftover one
+      // makes the replayed commit's rename collide (reported as
+      // "multiple streaming queries using the checkpoint")
+      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
+      drain(restart)
+      require(new java.io.File(commitsDir, crashedId).exists(),
+        s"restart did not replay and re-commit crashed $unit $crashedId")
     }
   }
 
-  private def runToSink(ds: org.apache.spark.sql.Dataset[_], name: String,
+  /** Run a streaming Dataset to completion into a temp PARQUET sink
+    * and read the files back — the same executor-side file sink a
+    * production deployment writes, so nothing in the verification
+    * path collects rows to the driver. Append-mode queries use the
+    * parquet file sink directly; `complete` mode (which the file sink
+    * cannot express) goes through foreachBatch overwriting the same
+    * path, the standard micro-batch-sink pattern for full-result
+    * refresh.
+    */
+  private def runToSink(ds: Dataset[_], name: String,
                         mode: String = "append"): DataFrame = {
     val spark = ds.sparkSession
-    tuneCheckpointIo(spark)
-    // state-store provider is env-selectable so the SAME oracle gate
-    // runs under the production RocksDB store (VERDICT r8 #7):
-    // SPARK_GRAFT_STATE_STORE=rocksdb — at 100 TB the default
-    // HDFS-backed in-memory store is the streaming bottleneck; RocksDB
-    // keeps state off-heap and incremental-checkpointed.
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { p =>
-      val cls = p.toLowerCase match {
-        case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"
-        case "hdfs" | "memory" => "org.apache.spark.sql.execution.streaming." +
-          "state.HDFSBackedStateStoreProvider"
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_STORE: unknown provider '$other' (rocksdb|hdfs)")
-      }
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
-    val tmp = java.nio.file.Files.createTempDirectory(s"graft-$name-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val out = new java.io.File(tmp, "out").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    // State partitions are sized by STATE VOLUME, not by the batch
-    // side's shuffle default: every stateful operator commits one
-    // store per partition per micro-batch (a symmetric join commits
-    // FOUR), so partitions × stores × batches delta-file fsyncs
-    // dominate wall time when per-partition state is small. The
-    // checkpoint pins the count for the query's lifetime either way —
-    // production picks it the same way, by state-per-partition, and
-    // scales it with SPARK_GRAFT_STREAM_PARTITIONS. Batch queries keep
-    // the session default (restored below; the stateful partitioning
-    // is locked into checkpoint metadata at the first batch).
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    val writer = ds.toDF().writeStream.option("checkpointLocation", chk)
-    try {
-      val q =
-        if (mode == "append")
-          writer.format("parquet").outputMode(mode).option("path", out).start()
-        else
-          writer.outputMode(mode).foreachBatch {
-            (batch: DataFrame, _: Long) =>
-              batch.write.mode("overwrite").parquet(out)
-          }.start()
-      try q.processAllAvailable() finally q.stop()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val run = new Run(spark, name)
+    val out = run.path("out")
+    val writer = ds.toDF().writeStream.option("checkpointLocation", run.chk)
+    run.atStateWidth(run.drain(
+      if (mode == "append")
+        writer.format("parquet").outputMode(mode).option("path", out).start()
+      else
+        writer.outputMode(mode).foreachBatch {
+          (batch: DataFrame, _: Long) =>
+            batch.write.mode("overwrite").parquet(out)
+        }.start()))
     // explicit schema: a stream that emitted zero rows leaves no (or
     // schemaless) parquet behind, where the old memory sink still
     // returned an empty schema-bearing table
     if (!new java.io.File(out).exists())
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        ds.toDF().schema)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], ds.toDF().schema)
     else spark.read.schema(ds.toDF().schema).parquet(out)
   }
 
@@ -282,77 +313,33 @@ object Stream {
   /** The exactly-once production sink pattern under a SIMULATED CRASH
     * (VERDICT r11 #6): the parquet file sink's own transaction log is
     * sink-side only, so production pipelines writing to external
-    * tables use the idempotent `foreachBatch` merge-write — each
-    * micro-batch lands in a BATCH-ID-KEYED directory with overwrite
-    * mode, so a replayed batch overwrites its own previous (possibly
-    * partial) output instead of appending duplicates. The harness
-    * exercises the real failure path: (1) stream the first six slices
+    * tables use the idempotent `foreachBatch` merge-write
+    * ([[Run.startBatchKeyed]]). The harness exercises the real failure
+    * path ([[Run.crashAndReplay]]): (1) stream the first six slices
     * to completion; (2) crash simulation — delete the newest
-    * `commits/<n>` marker from the checkpoint, exactly the state a
-    * JVM kill between sink write and commit leaves behind; (3)
-    * restart the SAME checkpoint against all twelve slices. Spark
-    * replays batch n from its recorded offsets and the state-store
-    * version n−1 (flatMapGroupsWithState recovery), the overwrite
-    * makes the replay idempotent, and the six new slices stream on
-    * normally. The run asserts the replayed batch re-committed; the
+    * `commits/<n>` marker from the checkpoint; (3) restart the SAME
+    * checkpoint against all twelve slices. Spark replays batch n from
+    * its recorded offsets and the state-store version n−1
+    * (flatMapGroupsWithState recovery), the overwrite makes the replay
+    * idempotent, and the six new slices stream on normally. The run asserts the replayed batch re-committed; the
     * oracle (the batch sosfilt CTE, unchanged) then proves
     * exactly-once delivery — a duplicated or dropped replay fails the
-    * row-count/hash gate. Green under RocksDB
-    * (SPARK_GRAFT_STATE_STORE=rocksdb).
+    * row-count/hash gate. Green under the RocksDB state store too.
     */
   def streamExactlyOnce(s: SparkSession, dir: String): DataFrame = {
-    sys.env.get("SPARK_GRAFT_STATE_STORE").foreach { p =>
-      val cls = p.toLowerCase match {
-        case "rocksdb" => "org.apache.spark.sql.execution.streaming." +
-          "state.RocksDBStateStoreProvider"
-        case "hdfs" | "memory" => "org.apache.spark.sql.execution.streaming." +
-          "state.HDFSBackedStateStoreProvider"
-        case other => throw new IllegalArgumentException(
-          s"SPARK_GRAFT_STATE_STORE: unknown provider '$other' (rocksdb|hdfs)")
-      }
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", cls)
-    }
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-eo-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val out = new java.io.File(tmp, "out").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    def start(glob: String) =
+    val run = new Run(s, "stream-eo")
+    val out = run.path("out")
+    def start(glob: String) = run.startBatchKeyed(
       Streaming.streamingSosfilt(slicedEventStream(s, dir, 12, glob),
-          Design.butterSos(4, 0.3))
-        .toDF().writeStream.option("checkpointLocation", chk)
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, id: Long) =>
-          batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-        }.start()
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q1 = start("ev_00[0-5].parquet")
-      try q1.processAllAvailable() finally q1.stop()
-      val commitsDir = new java.io.File(chk, "commits")
-      val commits = Option(commitsDir.listFiles()).getOrElse(Array.empty)
-        .filter(_.getName.forall(_.isDigit))
-      require(commits.nonEmpty, "phase 1 committed no batches")
-      val latest = commits.maxBy(_.getName.toInt)
-      val crashedId = latest.getName
-      require(latest.delete(), s"could not delete commit marker $crashedId")
-      // the local ChecksumFs keeps a .<n>.crc sidecar; a leftover one
-      // makes the replayed commit's rename collide (reported as
-      // "multiple streaming queries using the checkpoint")
-      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-      val q2 = start("ev_*.parquet")
-      try q2.processAllAvailable() finally q2.stop()
-      require(new java.io.File(commitsDir, crashedId).exists(),
-        s"restart did not replay and re-commit crashed batch $crashedId")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        Design.butterSos(4, 0.3)).toDF(), out)
+    run.atStateWidth(run.crashAndReplay(
+      start("ev_00[0-5].parquet"), start("ev_*.parquet"))(_ => ()))
     s.read.parquet(out).drop("batch")
       .select(col("user_id"), col("pos").cast("int").as("pos"),
         fp6(col("value")).as("value_fp"))
       .orderBy("user_id", "pos")
   }
+
 
   /** Streaming distinct-users-per-window via HLL++, GATED — the
     * live-dashboard staple (unique visitors per 10-minute window)
@@ -591,11 +578,10 @@ object Stream {
         // recomputation regardless of cache state.
         val sorted = ev.filter(col("_p") === p)
           .sort(expr("ts div 1000"), col("user_id"), col("value"), col("event_type"))
-        val idxSchema = sorted.schema
-          .add("_rn", org.apache.spark.sql.types.LongType)
+        val idxSchema = sorted.schema.add("_rn", LongType)
         val idx = s.createDataFrame(
-            sorted.rdd.zipWithIndex.map { case (r, i) =>
-              org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, idxSchema)
+            sorted.rdd.zipWithIndex().map { case (r, i) =>
+              Row.fromSeq(r.toSeq :+ i) }, idxSchema)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val n = idx.count()
         val chunk = math.max(1L, math.ceil(n.toDouble / nSegs).toLong)
@@ -624,6 +610,39 @@ object Stream {
     new java.io.File(root, "t").getAbsolutePath
   }
 
+  /** The envelope payload [[ledgerTopic]] writes (its inner `to_json`). */
+  private val ledgerPayload = StructType(Seq(
+    StructField("user_id", LongType), StructField("ts", LongType),
+    StructField("event_type", StringType), StructField("value", DoubleType)))
+
+  /** The ledger topic as a stream paced by the source's admission
+    * control (maxRecordsPerTrigger): the source's `partition`/`offset`
+    * plus the decoded payload (`ts_ns` is the event's nanos long).
+    */
+  private def ledgerStream(s: SparkSession, topic: String, trigger: Long): DataFrame =
+    s.readStream.format("graft.sources.LedgerProvider")
+      .option("maxRecordsPerTrigger", trigger.toString).load(topic)
+      .select(col("partition"), col("offset"),
+        from_json(col("value"), ledgerPayload).as("e"))
+      .select(col("partition"), col("offset"),
+        col("e.user_id").as("user_id"), col("e.ts").as("ts_ns"),
+        col("e.event_type").as("event_type"), col("e.value").as("value"))
+
+  /** Records per trigger for about `batches` paced micro-batches over
+    * `n` records. The trigger is a capacity knob SCALED to the corpus
+    * (the r17 ×10 bench measured a fixed 2000-record trigger at 105 s
+    * for 1M records — 500 micro-batches per lifecycle; a fixed trigger
+    * is itself the scale bug): a fixed number of paced batches per
+    * lifecycle at any SF keeps the multi-batch replay semantics the
+    * harness exists to exercise while the per-commit budget grows with
+    * the data, exactly how production sizes admission control. The
+    * `floor` caps at n/4 so a tiny corpus (sf0.001: ~1k records) still
+    * paces >= 4 micro-batches instead of tripping the multi-batch gate.
+    */
+  private def pacedTrigger(n: Long, floor: Long, batches: Int): Long =
+    math.max(math.min(floor, math.max(1L, n / 4)),
+      math.ceil(n.toDouble / batches).toLong)
+
   /** The windowed-counts operator driven from the Kafka-shaped DSv2
     * ledger source instead of the file source: envelope → `from_json`
     * payload decode → the SAME [[Streaming.windowedCounts]] state
@@ -636,29 +655,9 @@ object Stream {
     * LedgerSpec.
     */
   def streamLedgerCounts(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
     // trigger size is a CAPACITY knob, not a corpus property —
-    // production sizes it to bound per-commit state pressure; the
-    // env override is how the ×100 gate runs with a proportionally
-    // larger budget instead of 500 tiny batches
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_LEDGER_TRIGGER", "20000")
-    val ev = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"))
-      .select(col("e.user_id"),
-        timestamp_micros(expr("e.ts div 1000")).as("ts"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .as[Streaming.Event]
+    // production sizes it to bound per-commit state pressure
+    val ev = asEvents(ledgerStream(s, ledgerTopic(s, dir), 20000L), "ts_ns")
     runToSink(
       Streaming.windowedCounts(ev.toDF(), "5 minutes", "10 minutes"),
       "stream_ledger_sink", mode = "complete")
@@ -666,6 +665,15 @@ object Stream {
         col("n"), fp2(col("sum_value")).as("sum_fp"))
       .orderBy("w_start_s", "event_type")
   }
+
+  /** The windowed aggregate over a sink of ledger events, computed
+    * batch-side; shares the stream_windowed_counts oracle.
+    */
+  private def windowedCountsOf(sink: DataFrame): DataFrame =
+    sink.groupBy(expr("((ts_ns div 1000) div 300000000) * 300").as("w_start_s"),
+        col("event_type"))
+      .agg(count(lit(1)).as("n"), fp2(sum(col("value"))).as("sum_fp"))
+      .orderBy("w_start_s", "event_type")
 
   /** Exactly-once from the OFFSET-BASED source (VERDICT r14 #5): the
     * foreachBatch idempotent-sink pattern driven by the DSv2 ledger
@@ -683,65 +691,21 @@ object Stream {
     */
   def streamLedgerExactlyOnce(s: SparkSession, dir: String): DataFrame = {
     val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-    // capacity knob SCALED to the corpus (the r17 ×10 bench measured
-    // the old fixed 2000-record trigger at 105 s for 1M records — 500
-    // micro-batches per lifecycle; a fixed trigger is itself the scale
-    // bug). ~10 paced batches per lifecycle at any SF keeps the
-    // multi-batch replay semantics the harness exists to exercise
-    // while the per-commit budget grows with the data, exactly how
-    // production sizes admission control. Env still overrides.
-    val nRecords = s.read.parquet(s"$dir/events.parquet").count()
-    // the 2000-record floor caps at n/4 so a tiny corpus (sf0.001:
-    // ~1k records) still paces >= 4 micro-batches instead of tripping
-    // the multi-batch gate; unchanged for every n >= 8000
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_LEDGER_EO_TRIGGER",
-      math.max(math.min(2000L, math.max(1L, nRecords / 4)),
-        math.ceil(nRecords / 10.0).toLong).toString)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-leo-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val out = new java.io.File(tmp, "out").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    def start() = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"))
-      .select(col("e.user_id"), col("e.ts").as("ts_ns"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .writeStream.option("checkpointLocation", chk)
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }.start()
-    val q1 = start()
-    try q1.processAllAvailable() finally q1.stop()
-    val commitsDir = new java.io.File(chk, "commits")
-    val commits = Option(commitsDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.getName.forall(_.isDigit))
-    require(commits.length >= 3,
-      s"expected several paced micro-batches, got ${commits.length}")
-    val latest = commits.maxBy(_.getName.toInt)
-    val crashedId = latest.getName
-    require(latest.delete(), s"could not delete commit marker $crashedId")
-    new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
-    require(new java.io.File(commitsDir, crashedId).exists(),
-      s"restart did not replay and re-commit crashed epoch $crashedId")
-    s.read.parquet(out).drop("batch")
-      .groupBy(expr("((ts_ns div 1000) div 300000000) * 300").as("w_start_s"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), fp2(sum(col("value"))).as("sum_fp"))
-      .orderBy("w_start_s", "event_type")
+    // ~10 paced batches per lifecycle; from n = 8000 up every trigger
+    // admits at least 2000 records
+    val trigger = pacedTrigger(s.read.parquet(s"$dir/events.parquet").count(),
+      2000L, 10)
+    val run = new Run(s, "stream-leo")
+    val out = run.path("out")
+    def start() = run.startBatchKeyed(ledgerStream(s, topic, trigger)
+      .select("user_id", "ts_ns", "event_type", "value"), out)
+    run.crashAndReplay(start(), start(), "epoch")(n =>
+      require(n >= 3, s"expected several paced micro-batches, got $n"))
+    windowedCountsOf(s.read.parquet(out).drop("batch"))
   }
+
+  private def emptyFrame(s: SparkSession, schema: StructType): DataFrame =
+    s.createDataFrame(new java.util.ArrayList[Row](), schema)
 
   /** Streaming INTO the transaction-log table format (VERDICT r16 #1):
     * each ledger micro-batch commits into a [[graft.sources.ManifestTable]]
@@ -782,87 +746,38 @@ object Stream {
   def streamManifestSink(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.ManifestTable
     val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
     val nEvents = s.read.parquet(s"$dir/events.parquet").count()
-    // floor capped at n/4 for tiny corpora (see the ledger-EO note);
-    // identical for every n >= 2000
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_MSINK_TRIGGER",
-      math.max(math.min(500L, math.max(1L, nEvents / 4)),
-        math.ceil(nEvents / 6.0).toLong).toString)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-msink-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val table = new java.io.File(tmp, "table").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("ev_key",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_ns",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
+    // ~6 paced batches per run; from n = 2000 up every trigger admits
+    // at least 500 records
+    val trigger = pacedTrigger(nEvents, 500L, 6)
+    val run = new Run(s, "stream-msink")
+    val table = run.path("table")
+    val sinkSchema = StructType(Seq(
+      StructField("ev_key", LongType, nullable = false),
+      StructField("user_id", LongType), StructField("ts_ns", LongType),
+      StructField("event_type", StringType), StructField("value", DoubleType)))
     // v0: empty table, schema logged, keyed on the offset-derived key
-    ManifestTable.create(s,
-      table, s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        sinkSchema), "ev_key", 1)
+    ManifestTable.create(s, table, emptyFrame(s, sinkSchema), "ev_key", 1)
     val committed = new java.util.concurrent.atomic.AtomicLong(0)
     val skipped = new java.util.concurrent.atomic.AtomicLong(0)
-    def start() = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"),
-        col("partition"), col("offset"))
+    def start() = ledgerStream(s, topic, trigger)
       .select(
         (col("partition").cast("long") * lit(1L << 40) + col("offset"))
           .as("ev_key"),
-        col("e.user_id").as("user_id"), col("e.ts").as("ts_ns"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .writeStream.option("checkpointLocation", chk)
+        col("user_id"), col("ts_ns"), col("event_type"), col("value"))
+      .writeStream.option("checkpointLocation", run.chk)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         if (ManifestTable.appendBatch(s, table, batch, "msink", id, buckets = 1))
           committed.incrementAndGet()
         else skipped.incrementAndGet()
         ()
       }.start()
-    // Batch-volume-sized shuffle partitions for the per-micro-batch
-    // work (optimization round 22 — the runToSink state-volume rule,
-    // which this entry never got because it doesn't go through
-    // runToSink): every appendBatch aggregation/write inside
-    // foreachBatch otherwise inherits the session's full-corpus
-    // shuffle count for a delta-sized frame. Same env knob, same
-    // production scaling story; restored before the returned (full-
-    // table) aggregate plans.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
+    // every appendBatch aggregation/write inside foreachBatch runs at
+    // the state width; restored before the returned (full-table)
+    // aggregate plans
+    run.atStateWidth(run.crashAndReplay(start(), start())(_ =>
       require(committed.get >= 3,
-        s"expected several paced micro-batch commits, got ${committed.get}")
-      val commitsDir = new java.io.File(chk, "commits")
-      val latestMarker = commitsDir.listFiles().filter(_.getName.forall(_.isDigit))
-        .maxBy(_.getName.toInt)
-      val crashedId = latestMarker.getName
-      require(latestMarker.delete(), s"could not delete commit marker $crashedId")
-      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      require(new java.io.File(commitsDir, crashedId).exists(),
-        s"restart did not replay and re-commit crashed batch $crashedId")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+        s"expected several paced micro-batch commits, got ${committed.get}")))
     require(skipped.get >= 1,
       "replayed batch was not deduped by the manifest txn log")
     // CDC gate: v0→v1 is exactly the first batch, as pure inserts
@@ -879,18 +794,13 @@ object Stream {
     val lastBatch = ManifestTable.readSnapshot(table,
       ManifestTable.latestVersion(table)).txns("msink")
     ManifestTable.compact(s, table, buckets = 4)
-    require(!ManifestTable.appendBatch(s, table,
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        sinkSchema), "msink", lastBatch, 1),
+    require(!ManifestTable.appendBatch(s, table, emptyFrame(s, sinkSchema),
+      "msink", lastBatch, 1),
       "replay after compaction was not skipped — txn map lost")
     val total = ManifestTable.snapshot(s, table)
     require(total.count() == nEvents,
       s"manifest sink holds ${total.count()} rows, expected $nEvents")
-    total
-      .groupBy(expr("((ts_ns div 1000) div 300000000) * 300").as("w_start_s"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), fp2(sum(col("value"))).as("sum_fp"))
-      .orderBy("w_start_s", "event_type")
+    windowedCountsOf(total)
   }
 
   /** Streaming CDC-apply via idempotent MERGE (round 18 — Delta's
@@ -920,37 +830,14 @@ object Stream {
   def streamManifestMergeSink(s: SparkSession, dir: String): DataFrame = {
     import graft.sources.ManifestTable
     val topic = ledgerTopic(s, dir)
-    val payload = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-    val nEvents = s.read.parquet(s"$dir/events.parquet").count()
-    val trigger = sys.env.getOrElse("SPARK_GRAFT_MMSINK_TRIGGER",
-      math.max(math.min(500L, math.max(1L, nEvents / 4)),
-        math.ceil(nEvents / 6.0).toLong).toString)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mmsink-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val table = new java.io.File(tmp, "table").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("ts_ns",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("event_type",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("value",
-        org.apache.spark.sql.types.DoubleType)))
-    ManifestTable.create(s, table,
-      s.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-        sinkSchema), "user_id", 1)
+    val trigger = pacedTrigger(s.read.parquet(s"$dir/events.parquet").count(),
+      500L, 6)
+    val run = new Run(s, "stream-mmsink")
+    val table = run.path("table")
+    ManifestTable.create(s, table, emptyFrame(s, StructType(Seq(
+      StructField("user_id", LongType, nullable = false),
+      StructField("ts_ns", LongType), StructField("event_type", StringType),
+      StructField("value", DoubleType)))), "user_id", 1)
     val committed = new java.util.concurrent.atomic.AtomicLong(0)
     val skipped = new java.util.concurrent.atomic.AtomicLong(0)
     def apply(batch: DataFrame, id: Long): Unit = {
@@ -967,36 +854,18 @@ object Stream {
       else skipped.incrementAndGet()
       ()
     }
-    def start() = s.readStream.format("graft.sources.LedgerProvider")
-      .option("maxRecordsPerTrigger", trigger).load(topic)
-      .select(from_json(col("value"), payload).as("e"))
-      .select(col("e.user_id").as("user_id"), col("e.ts").as("ts_ns"),
-        col("e.event_type").as("event_type"), col("e.value").as("value"))
-      .writeStream.option("checkpointLocation", chk)
+    def start() = ledgerStream(s, topic, trigger)
+      .select("user_id", "ts_ns", "event_type", "value")
+      .writeStream.option("checkpointLocation", run.chk)
       .foreachBatch(apply _).start()
-    // batch-volume-sized shuffle partitions for the per-micro-batch
-    // merges (round 22 — the runToSink state-volume rule; see the
-    // stream_manifest_sink note). Restored before the returned
-    // full-table aggregate plans.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
-    try {
-      val q1 = start()
-      try q1.processAllAvailable() finally q1.stop()
-      require(committed.get >= 3,
-        s"expected several paced micro-batch merges, got ${committed.get}")
+    // the per-micro-batch merges and the stale-guard merge run at the
+    // state width; restored before the returned full-table aggregate
+    // plans
+    run.atStateWidth {
       // crash between sink commit and checkpoint commit -> replay skips
-      val commitsDir = new java.io.File(chk, "commits")
-      val latestMarker = commitsDir.listFiles().filter(_.getName.forall(_.isDigit))
-        .maxBy(_.getName.toInt)
-      val crashedId = latestMarker.getName
-      require(latestMarker.delete(), s"could not delete commit marker $crashedId")
-      new java.io.File(commitsDir, s".$crashedId.crc").delete(): Unit
-      val q2 = start()
-      try q2.processAllAvailable() finally q2.stop()
-      require(new java.io.File(commitsDir, crashedId).exists(),
-        s"restart did not replay and re-commit crashed batch $crashedId")
+      run.crashAndReplay(start(), start())(_ =>
+        require(committed.get >= 3,
+          s"expected several paced micro-batch merges, got ${committed.get}"))
       require(skipped.get >= 1,
         "replayed merge batch was not deduped by the manifest txn log")
       val latest = ManifestTable.readSnapshot(table,
@@ -1015,12 +884,13 @@ object Stream {
         matchedUpdate = Some(ManifestTable.srcCol("ts_ns") > col("ts_ns")),
         notMatchedInsert = Some(lit(true))),
         "stale guard batch must commit (as a no-row-change merge)")
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     ManifestTable.snapshot(s, table)
       .select(col("user_id"), col("ts_ns"), col("event_type"),
         fp2(col("value")).as("value_fp"))
       .orderBy("user_id")
   }
+
 
   /** Oracle for the merge sink: per user, the latest-ts event — the
     * batch-slicing-independent fixed point the out-of-order guard
@@ -1064,19 +934,15 @@ object Stream {
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority")
     def slice(r: Int) = orders.filter(col("o_orderkey") % 6 === r)
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-msrc-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val table = new java.io.File(tmp, "table").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    val out = new java.io.File(tmp, "out").getAbsolutePath
+    val run = new Run(s, "stream-msrc")
+    val table = run.path("table")
+    val out = run.path("out")
     ManifestTable.create(s, table, slice(0), "o_orderkey", 2)
     (1 to 2).foreach(r =>
       ManifestTable.appendBatch(s, table, slice(r), "seed", r.toLong, buckets = 2))
     def start() = s.readStream.format("graft.sources.ManifestStreamProvider")
       .option("maxVersionsPerTrigger", "1").load(table)
-      .writeStream.option("checkpointLocation", chk)
+      .writeStream.option("checkpointLocation", run.chk)
       .format("parquet").option("path", out).start()
     val q1 = start()
     try {
@@ -1089,8 +955,7 @@ object Stream {
     // restart from checkpoint: the tail resumes at the committed
     // version; re-emitting any earlier slice breaks the oracle counts
     ManifestTable.appendBatch(s, table, slice(5), "seed", 5L, buckets = 2)
-    val q2 = start()
-    try q2.processAllAvailable() finally q2.stop()
+    run.drain(start())
     require(ManifestTable.latestVersion(table) == 6,
       s"expected 7 versions, got ${ManifestTable.latestVersion(table) + 1}")
     // Pacing leg (round 19 — Delta's maxFilesPerTrigger/maxBytesPerTrigger
@@ -1160,13 +1025,9 @@ object Stream {
     val orders = Tables.load(s, dir, "orders")
       .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
         "o_orderpriority")
-    tuneCheckpointIo(s)
-    val tmp = java.nio.file.Files.createTempDirectory("graft-stream-mcdc-").toFile
-    cleanupHookInstalled
-    pendingTmp.add(tmp)
-    val table = new java.io.File(tmp, "table").getAbsolutePath
-    val chk = new java.io.File(tmp, "chk").getAbsolutePath
-    val out = new java.io.File(tmp, "out").getAbsolutePath
+    val run = new Run(s, "stream-mcdc")
+    val table = run.path("table")
+    val out = run.path("out")
     ManifestTable.create(s, table,
       orders.filter(col("o_orderkey") % 4 =!= 3), "o_orderkey", 4)
     val updates = orders.filter(col("o_orderkey") % 10 === 0)
@@ -1174,18 +1035,15 @@ object Stream {
     val inserts = orders.filter(col("o_orderkey") % 4 === 3)
     ManifestTable.upsert(s, table, updates.unionByName(inserts), buckets = 2)
     ManifestTable.deleteRange(s, table, 1000L, 2999L)
-    val q = s.readStream.format("graft.sources.ManifestStreamProvider")
+    run.drain(s.readStream.format("graft.sources.ManifestStreamProvider")
       .option("readChangeFeed", "true")
       .option("maxVersionsPerTrigger", "1").load(table)
-      .writeStream.option("checkpointLocation", chk)
-      .format("parquet").option("path", out).start()
-    try q.processAllAvailable() finally q.stop()
-    val cdcSchema = org.apache.spark.sql.types.StructType(
+      .writeStream.option("checkpointLocation", run.chk)
+      .format("parquet").option("path", out).start())
+    val cdcSchema = StructType(
       ManifestTable.schemaOf(ManifestTable.readSnapshot(table, 2)).get.fields.toSeq :+
-        org.apache.spark.sql.types.StructField("_change_type",
-          org.apache.spark.sql.types.StringType) :+
-        org.apache.spark.sql.types.StructField("_commit_version",
-          org.apache.spark.sql.types.IntegerType))
+        StructField("_change_type", StringType) :+
+        StructField("_commit_version", IntegerType))
     s.read.schema(cdcSchema).parquet(out)
       .groupBy(col("_commit_version").as("commit_v"), col("_change_type").as("change"))
       .agg(count(lit(1)).as("n"),
@@ -1503,10 +1361,7 @@ object Stream {
     * though the surviving doc_id is not.
     */
   def streamDedup(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = s.read.parquet(path).schema
-    val docsStream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val docsStream = tableStream(s, dir, "documents")
       // documents carry no event time; a constant stamp keeps every
       // row inside one watermark window (bounded-stream replay of the
       // batch semantics — production streams pass their real ts)
@@ -1531,10 +1386,7 @@ object Stream {
     * executor once per batch). The oracle is the plain batch join.
     */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val ev = s.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val ev = tableStream(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("value"))
     val cust = broadcast(Tables.load(s, dir, "customer")
       .select(col("c_custkey"), col("c_nationkey"), col("c_acctbal")))
@@ -1662,18 +1514,13 @@ object Stream {
     * streaming-safe (no window/agg sneaking in). The oracle is the
     * batch rule replay restricted to the same columns.
     */
-  def streamQuality(s: SparkSession, dir: String): DataFrame = {
-    val path = s"$dir/documents.parquet"
-    val schema = s.read.parquet(path).schema
-    val docsStream = s.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+  def streamQuality(s: SparkSession, dir: String): DataFrame =
     runToSink(
-      graft.operators.TextOps.gopherRules(docsStream.toDF(), "text")
+      graft.operators.TextOps.gopherRules(tableStream(s, dir, "documents"), "text")
         .select(col("doc_id"), col("n_words"), col("n_stop"),
           col("r_words"), col("r_stop"), col("keep")),
       "stream_quality_sink")
       .orderBy("doc_id")
-  }
 
   private val streamQualitySql: String =
     """WITH w AS (

@@ -1970,14 +1970,40 @@ object ManifestTable {
     readFiles(spark, table, s, hit).filter(predicate)
   }
 
-  /** Copy-on-write upsert: delta rows replace same-key rows, new keys
-    * append. Only files whose key range contains at least one delta
-    * key are rewritten; every other file carries forward BY REFERENCE
-    * into the new manifest (zero IO — the property that makes a daily
-    * delta affordable on a 100 TB table). Touched-file detection is a
-    * broadcast join of the (small) file-range list against the delta
-    * keys, collecting only distinct FILE NAMES (control plane).
+  /** Key hygiene of an upsert delta or merge source (`what`): one pass
+    * counting rows, distinct keys and NULL keys, submitted on the
+    * global pool so it overlaps the caller's touched-file probe (round
+    * 22, guide §2.6 — independent control-plane jobs over the same
+    * delta-sized frame). Pool threads do not carry the caller's Spark
+    * local properties, so the job runs under the caller's job group,
+    * description and interrupt flag, set around it: cancelling the
+    * group reaches it. The returned check waits for the pass and fails
+    * loudly on NULL or duplicate keys.
     */
+  private def keyCheck(spark: SparkSession, frame: DataFrame, keyCol: String,
+                       what: String): () => Unit = {
+    val sc = spark.sparkContext
+    val props = Seq("spark.jobGroup.id", "spark.job.description",
+      "spark.job.interruptOnCancel").map(k => k -> sc.getLocalProperty(k))
+    val counts = scala.concurrent.Future {
+      val prev = props.map { case (k, _) => k -> sc.getLocalProperty(k) }
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      try frame.agg(count(lit(1)).as("n"), count_distinct(col(keyCol)).as("k"),
+          count(when(col(keyCol).isNull, lit(1))).as("nulls")).collect()(0)
+      finally prev.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+    }(scala.concurrent.ExecutionContext.global)
+    () => {
+      val r = scala.concurrent.Await.result(counts,
+        scala.concurrent.duration.Duration.Inf)
+      require(r.getLong(2) == 0L,
+        s"$what has ${r.getLong(2)} NULL $keyCol keys — " +
+        "the manifest key column must be non-null")
+      require(r.getLong(0) == r.getLong(1),
+        s"$what has duplicate keys: ${r.getLong(0)} rows but " +
+        s"${r.getLong(1)} distinct $keyCol")
+    }
+  }
+
   /** Files whose key range may contain one of the frame's keys — the
     * touched tier of upsert/MERGE/delete, decided from manifest
     * metadata alone (broadcast range join, control-plane collect of
@@ -2021,6 +2047,14 @@ object ManifestTable {
   // round 22 — measured, then reverted): caching the delta left
   // src_/stream_manifest_cdc flat while adding the materialization
   // barrier; the delta lineages here are cheap scans (guide §5).
+  /** Copy-on-write upsert: delta rows replace same-key rows, new keys
+    * append. Only files whose key range contains at least one delta
+    * key are rewritten; every other file carries forward BY REFERENCE
+    * into the new manifest (zero IO — the property that makes a daily
+    * delta affordable on a 100 TB table). Touched-file detection is a
+    * broadcast join of the (small) file-range list against the delta
+    * keys, collecting only distinct FILE NAMES (control plane).
+    */
   def upsert(spark: SparkSession, table: String, delta: DataFrame,
              buckets: Int): Snapshot = commitWithRetry(table) { v =>
     require(v >= 0, s"no manifest in $table/_log")
@@ -2034,23 +2068,11 @@ object ManifestTable {
     // are checked separately (ADVICE r15: count_distinct ignores
     // NULLs, so a null-key delta used to be misreported as
     // "duplicate keys"). All three counts come from one pass over the
-    // (small, daily-delta-sized) frame.
-    // concurrent with the touched-file probe (round 22, guide §2.6 —
-    // see mergeCoreImpl): independent control-plane jobs over the
-    // same delta, no longer sequential per streaming micro-batch
-    val dupF = scala.concurrent.Future(delta
-      .agg(count(lit(1)).as("n"), count_distinct(col(keyCol)).as("k"),
-        count(when(col(keyCol).isNull, lit(1))).as("nulls")).collect()(0))(
-      scala.concurrent.ExecutionContext.global)
+    // (small, daily-delta-sized) frame, concurrent with the
+    // touched-file probe.
+    val checkKeys = keyCheck(spark, delta, keyCol, "upsert delta")
     val touchedNames = touchedByKeys(spark, cur, delta, keyCol)
-    val dupCheck = scala.concurrent.Await.result(dupF,
-      scala.concurrent.duration.Duration.Inf)
-    require(dupCheck.getLong(2) == 0L,
-      s"upsert delta has ${dupCheck.getLong(2)} NULL $keyCol keys — " +
-      "the manifest key column must be non-null")
-    require(dupCheck.getLong(0) == dupCheck.getLong(1),
-      s"upsert delta has duplicate keys: ${dupCheck.getLong(0)} rows but " +
-      s"${dupCheck.getLong(1)} distinct $keyCol")
+    checkKeys()
     val (touched, untouched) = cur.files.partition(f => touchedNames(f.name))
 
     // Keys in untouched files cannot collide with delta keys (no range
@@ -2273,23 +2295,13 @@ object ManifestTable {
       // the same delta-sized source and neither depends on the other,
       // so a streaming MERGE sink no longer pays their walls in
       // sequence every micro-batch.
-      val dupF = scala.concurrent.Future(source
-        .agg(count(lit(1)).as("n"), count_distinct(col(keyCol)).as("k"),
-          count(when(col(keyCol).isNull, lit(1))).as("nulls")).collect()(0))(
-        scala.concurrent.ExecutionContext.global)
+      val checkKeys = keyCheck(spark, source, keyCol, "merge source")
       // Touched tiers: key-range overlap with a source key (broadcast
       // range join, control-plane collect of file NAMES), plus — only
       // when the by-source clause exists — files whose stats admit its
       // predicate (rows it might delete live nowhere else).
       val matchTouched = touchedByKeys(spark, cur, source, keyCol)
-      val dupCheck = scala.concurrent.Await.result(dupF,
-        scala.concurrent.duration.Duration.Inf)
-      require(dupCheck.getLong(2) == 0L,
-        s"merge source has ${dupCheck.getLong(2)} NULL $keyCol keys — " +
-        "the manifest key column must be non-null")
-      require(dupCheck.getLong(0) == dupCheck.getLong(1),
-        s"merge source has duplicate keys: ${dupCheck.getLong(0)} rows but " +
-        s"${dupCheck.getLong(1)} distinct $keyCol")
+      checkKeys()
       val bySrcTouched: Set[String] = bySrcPe match {
         case Some(pe) =>
           cur.files.filter(f => canMatch(f, st0, pe, physName(cur))).map(_.name).toSet
